@@ -3,11 +3,13 @@ fixture from FIXTURES.md §A (hand-verifiable goldens in test_pipelines)."""
 
 from __future__ import annotations
 
+import os
 import sys
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+# the checkout this file lives in, not whichever one is installed
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from tvbigdataproject_spark.schemas import TWEET_SCHEMA  # noqa: E402
 from tvbigdataproject_spark.session import get_spark  # noqa: E402
@@ -72,3 +74,18 @@ TWEETS = [
 @pytest.fixture(scope="session")
 def tweets_df(spark):
     return spark.createDataFrame(TWEETS, TWEET_SCHEMA)
+
+
+@pytest.fixture(scope="session")
+def tweets_json(spark, tweets_df, tmp_path_factory):
+    """The golden corpus as a JSON-lines input, as the CLI reads it."""
+    path = str(tmp_path_factory.mktemp("tweets") / "tweets.json")
+    tweets_df.write.mode("overwrite").json(path)
+    return path
+
+
+@pytest.fixture
+def persisted_rdds(spark):
+    """Returns the ids of the RDDs the session holds persisted now."""
+    jsc = spark.sparkContext._jsc
+    return lambda: {int(k) for k in jsc.getPersistentRDDs().keySet().toArray()}

@@ -13,13 +13,6 @@ import pytest
 from tvbigdataproject_spark.__main__ import build_parser, main
 
 
-@pytest.fixture(scope="module")
-def tweets_json(spark, tweets_df, tmp_path_factory):
-    path = str(tmp_path_factory.mktemp("cli") / "tweets.json")
-    tweets_df.write.mode("overwrite").json(path)
-    return path
-
-
 def _read_csv(path, sep=","):
     with open(path, newline="") as fh:
         return list(csv.reader(fh, delimiter=sep))
@@ -75,3 +68,54 @@ def test_cli_flag_spelling_matches_reference():
     args = build_parser().parse_args(["in.json"])
     assert args.only_tags_from_not_retweetted_posts is False
     assert args.save_full_graph is False and args.id_neighbours is None
+
+
+def test_cli_releases_persisted_tables(spark, tweets_json, tmp_path, persisted_rdds):
+    # the pipeline persists its shared tables for the run; main() must
+    # hand the session back without them
+    before = persisted_rdds()
+    main(
+        [
+            tweets_json,
+            "--output_path", str(tmp_path / "outputs"),
+            "--save_pbi_report",
+            "--id_neighbours", "1",
+        ],
+        spark=spark,
+    )
+    assert persisted_rdds() <= before
+
+
+class _OwnedSession:
+    """Stands in for the session main() creates itself: delegates to the
+    test session and records stop() instead of stopping it."""
+
+    def __init__(self, spark):
+        self._spark = spark
+        self.stopped = False
+
+    def __getattr__(self, name):
+        return getattr(self._spark, name)
+
+    def stop(self):
+        self.stopped = True
+
+
+def test_cli_cleans_up_when_an_artifact_raises(
+    spark, tweets_json, tmp_path, monkeypatch, persisted_rdds
+):
+    import tvbigdataproject_spark.session as session
+    import tvbigdataproject_spark.sources.io as io
+
+    def failing_save_graph(vertices, edges, *args, **kwargs):
+        edges.count()  # materialise the persisted tables first
+        raise RuntimeError("sink failed")
+
+    owned = _OwnedSession(spark)
+    monkeypatch.setattr(session, "get_spark", lambda **kwargs: owned)
+    monkeypatch.setattr(io, "save_graph", failing_save_graph)
+    before = persisted_rdds()
+    with pytest.raises(RuntimeError, match="sink failed"):
+        main([tweets_json, "--output_path", str(tmp_path / "outputs"), "--save_full_graph"])
+    assert persisted_rdds() <= before
+    assert owned.stopped

@@ -5,14 +5,21 @@ see SURVEY.md §2.11 for the reference composition each mirrors."""
 from __future__ import annotations
 
 import pytest
+from hypothesis import HealthCheck, example, given, settings
+from hypothesis import strategies as st
+from pyspark import StorageLevel
 from pyspark.sql import functions as F
 
+from tvbigdataproject_spark.functions import jaccard
 from tvbigdataproject_spark.plans import TweetGraphPipeline
+from tvbigdataproject_spark.schemas import TWEET_SCHEMA
 
 
 @pytest.fixture(scope="module")
 def pipe(spark, tweets_df):
-    return TweetGraphPipeline(spark, tweets=tweets_df)
+    p = TweetGraphPipeline(spark, tweets=tweets_df)
+    yield p
+    p.close()
 
 
 def rows(df, *cols):
@@ -100,6 +107,9 @@ def test_q4_full_graph(pipe):
     assert ("8", "7", "JC") in edges
     # edge count: 4 RT + 15 HT + 1 JC
     assert g.edges.count() == 20
+    # the RT/HT/JC parts are each unique on (src, dst) and differ in
+    # type, so the union needs no distinct
+    assert g.edges.count() == g.edges.distinct().count()
 
 
 def test_q5_bi_report(pipe):
@@ -161,3 +171,82 @@ def test_q7_quirk_flags(pipe):
     ids = {r["id"] for r in g.vertices.collect()}
     # u3's tags are in the frontier now, and u4 (retweeter of 3) too
     assert "alpha" in ids and "4" in ids
+
+
+def test_shared_tables_built_once_and_released_on_close(spark, tweets_json, persisted_rdds):
+    # a JSON-backed pipeline: its plans are its own, not the fixture's
+    before = persisted_rdds()
+    with TweetGraphPipeline(spark, path=tweets_json) as p:
+        tables = [p.user_hashtags(), p.retweet_edges(), p.jaccard_edges()]
+        again = [p.user_hashtags(), p.retweet_edges(), p.jaccard_edges()]
+        assert all(a is b for a, b in zip(again, tables))
+        g = p.full_graph()
+        assert p.full_graph() is g
+        sub = p.neighborhood("1")
+        assert p.neighborhood("1", hops=2) is sub
+        assert p.neighborhood("1", hops=1) is not sub
+        tables += [g.edges, sub.edges]
+        assert all(t.storageLevel.useMemory for t in tables)
+        # persist() is lazy: no table is materialised until an action
+        assert persisted_rdds() <= before
+        assert sub.edges.count() == 6
+        p.bi_report().collect()
+        assert persisted_rdds() - before
+    assert all(t.storageLevel == StorageLevel.NONE for t in tables)
+    assert persisted_rdds() <= before
+    assert p._tables == {}
+
+
+def _tag_tweet(uid, tags):
+    return {
+        "user": {"id": uid},
+        "text": None,
+        "hashtagEntities": [{"text": t} for t in tags],
+        "hashtagEntitiesArray": list(tags),
+        "retweeted_status": None,
+    }
+
+
+tag_sets = st.dictionaries(
+    st.integers(1, 9),
+    st.sets(st.sampled_from("abcdefg"), min_size=1, max_size=7),
+    min_size=2,
+    max_size=8,
+)
+
+
+@given(users=tag_sets)
+# |A∩B| = 2, |A∪B| = 4: exactly 0.5, which the strict gate drops
+@example(users={1: {"a", "b"}, 2: {"a", "b", "c", "d"}, 3: {"a", "b", "c"}})
+@settings(
+    max_examples=8,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture, HealthCheck.too_slow],
+)
+def test_q3_count_weight_is_bitwise_jaccard(spark, users):
+    tweets = spark.createDataFrame(
+        [_tag_tweet(u, sorted(ts)) for u, ts in users.items()], TWEET_SCHEMA
+    )
+    # python ground truth for the candidate gate (≥ 2 shared tags)
+    cands = {
+        (str(b), str(a)): len(users[a] & users[b]) / len(users[a] | users[b])
+        for a in users
+        for b in users
+        if str(a) < str(b) and len(users[a] & users[b]) >= 2
+    }
+    with TweetGraphPipeline(spark, tweets=tweets, jaccard_threshold=0.0) as p:
+        hts = p.user_hashtags()
+        scored = (
+            p.jaccard_edges()
+            .join(hts.select(F.col("id").alias("src"), F.col("hts").alias("hts_s")), "src")
+            .join(hts.select(F.col("id").alias("dst"), F.col("hts").alias("hts_d")), "dst")
+            .select("src", "dst", "w", jaccard(F.col("hts_s"), F.col("hts_d")).alias("j"))
+            .collect()
+        )
+    assert {(r["src"], r["dst"]) for r in scored} == set(cands)
+    # the count-based weight and the array jaccard divide the same two
+    # integers: equal bit for bit, not approximately
+    assert all(r["w"] == r["j"] == cands[(r["src"], r["dst"])] for r in scored)
+    with TweetGraphPipeline(spark, tweets=tweets) as p:
+        kept = {(r["src"], r["dst"]) for r in p.jaccard_edges().collect()}
+    assert kept == {pair for pair, j in cands.items() if j > 0.5}

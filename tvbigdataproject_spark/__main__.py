@@ -80,10 +80,8 @@ def build_parser() -> argparse.ArgumentParser:
 
 def main(argv: list[str] | None = None, spark=None) -> None:
     from tvbigdataproject_spark.plans import TweetGraphPipeline
-    from tvbigdataproject_spark.sources.io import save_graph, write_single_csv
 
     args = build_parser().parse_args(argv)
-    out = args.output_path
 
     owns_session = spark is None
     if owns_session:
@@ -91,14 +89,27 @@ def main(argv: list[str] | None = None, spark=None) -> None:
 
         spark = get_spark(app_name="BdProject")
 
-    print(f"Starting the processing of the file: {args.input_file}")
-    pipe = TweetGraphPipeline(
-        spark,
-        path=args.input_file,
-        jaccard_threshold=0.5,
-        only_tags_from_not_retweeted_posts=args.only_tags_from_not_retweetted_posts,
-    )
+    try:
+        print(f"Starting the processing of the file: {args.input_file}")
+        # the pipeline persists each shared table once; leaving the with
+        # block releases them, also when an artifact raises
+        with TweetGraphPipeline(
+            spark,
+            path=args.input_file,
+            jaccard_threshold=0.5,
+            only_tags_from_not_retweeted_posts=args.only_tags_from_not_retweetted_posts,
+        ) as pipe:
+            _write_artifacts(args, pipe)
+        print(f"Elaboration completed.\nOutput path: {args.output_path}")
+    finally:
+        if owns_session:
+            spark.stop()
 
+
+def _write_artifacts(args: argparse.Namespace, pipe) -> None:
+    from tvbigdataproject_spark.sources.io import save_graph, write_single_csv
+
+    out = args.output_path
     # every materialization rides inline quality accounting on its own
     # write (operators/quality.py via the sinks' audit hooks — df.observe,
     # zero extra scan) and reports rows written, the production habit of
@@ -158,10 +169,6 @@ def main(argv: list[str] | None = None, spark=None) -> None:
             f"  edges written: {gm['edges']['rows']}, "
             f"vertices written: {gm['vertices']['rows']}"
         )
-
-    print(f"Elaboration completed.\nOutput path: {out}")
-    if owns_session:
-        spark.stop()
 
 
 if __name__ == "__main__":

@@ -12,16 +12,13 @@ deliberate divergences, per SURVEY.md §7.4:
 
 from __future__ import annotations
 
+import functools
+import inspect
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from tvbigdataproject_spark.functions import (
-    array_to_string,
-    cnt_distinct_elems,
-    cnt_intersection,
-    jaccard,
-    normalize_tags,
-)
+from tvbigdataproject_spark.functions import array_to_string, normalize_tags
 from tvbigdataproject_spark.functions.text import simple_clean
 from tvbigdataproject_spark.operators.graph import (
     Graph,
@@ -32,11 +29,38 @@ from tvbigdataproject_spark.operators.graph import (
 from tvbigdataproject_spark.sources.io import read_tweets
 
 
+def _built_once(method):
+    """Memoise a table builder per pipeline (keyed by its bound
+    arguments) and persist the table it returns — a Graph's edges, whose
+    vertices are derived from them. persist() is lazy: the first action
+    that reads the table materialises it, and every later consumer reads
+    the cached rows instead of re-running the JSON scan and the joins."""
+    sig = inspect.signature(method)
+
+    @functools.wraps(method)
+    def wrapper(self, *args, **kwargs):
+        bound = sig.bind(self, *args, **kwargs)
+        bound.apply_defaults()
+        key = (method.__name__, *bound.args[1:])
+        if key not in self._tables:
+            out = method(self, *args, **kwargs)
+            (out.edges if isinstance(out, Graph) else out).persist()
+            self._tables[key] = out
+        return self._tables[key]
+
+    return wrapper
+
+
 class TweetGraphPipeline:
     """Retweet + hashtag + Jaccard unified graph over a tweet table.
 
-    Mirrors RetweetTagsJaccardGraph (reference :10-276) as lazy plan
-    builders; nothing materializes until the caller acts.
+    Mirrors RetweetTagsJaccardGraph (reference :10-276). The shared
+    tables — per-user hashtags, RT edges, JC edges, the full graph's
+    edges and each neighbourhood's edges — are built once per instance
+    and persisted lazily, so a sink that writes edges and vertices, the
+    hop joins of a neighbourhood and the BI report's JC reads all share
+    one materialisation. The tweet rows themselves are not cached.
+    ``close()`` (or leaving a ``with`` block) releases the tables.
     """
 
     def __init__(
@@ -55,9 +79,27 @@ class TweetGraphPipeline:
         self.tweets = tweets
         self.jaccard_threshold = jaccard_threshold
         self.only_tags_from_not_retweeted_posts = only_tags_from_not_retweeted_posts
+        # builder key -> DataFrame or Graph, in build order (see _built_once)
+        self._tables: dict[tuple, DataFrame | Graph] = {}
+
+    def close(self) -> None:
+        """Unpersist every table this pipeline built. Dependents go
+        first: releasing a table that another cached plan still reads
+        makes Spark rebuild that plan's cache entry. Calling a builder
+        afterwards builds its table afresh."""
+        for out in reversed(list(self._tables.values())):
+            (out.edges if isinstance(out, Graph) else out).unpersist()
+        self._tables.clear()
+
+    def __enter__(self) -> TweetGraphPipeline:
+        return self
+
+    def __exit__(self, *exc) -> None:
+        self.close()
 
     # --- Q1: retweet graph (reference :48-72) -----------------------------
 
+    @_built_once
     def retweet_edges(self) -> DataFrame:
         """user a → user b with weight = number of times b retweeted a.
 
@@ -77,6 +119,7 @@ class TweetGraphPipeline:
 
     # --- Q2: hashtag graph (reference :74-134) ----------------------------
 
+    @_built_once
     def user_hashtags(self) -> DataFrame:
         """(id, hts): per-user normalized, deduped, sorted hashtag set.
 
@@ -127,6 +170,7 @@ class TweetGraphPipeline:
 
     # --- Q3: Jaccard graph (reference :136-192) ---------------------------
 
+    @_built_once
     def jaccard_edges(self) -> DataFrame:
         """user ↔ user edges weighted by hashtag-set Jaccard similarity.
 
@@ -134,26 +178,30 @@ class TweetGraphPipeline:
         hashtags" (:158-165) → two joins to attach hashtag lists
         (:168-172) → string-typed jaccard UDF + threshold filter
         (:177-183). Here: pair_candidates (self-join + count gate) →
-        attach sets → native double-typed jaccard → threshold.
-        The candidate gate is the reference's own algorithmic idea —
-        kept, with the motif machinery deleted.
+        score from the counts → threshold. The candidate gate is the
+        reference's own algorithmic idea — kept, with the motif
+        machinery deleted.
+
+        Each user's set size rides along as part of the entity, so the
+        self-join's group count |A∩B| and the two sizes give
+        |A∪B| = |A| + |B| − |A∩B| with no join to re-attach the sets.
+        ``hts`` is already distinct, so the weight divides the same two
+        integers as functions.jaccard and is bit-identical to it.
         """
-        mapping = self.user_hashtags()
-        tag_edges = mapping.select("id", F.explode("hts").alias("tag"))
-        cands = pair_candidates(tag_edges, min_shared=2, src_col="id", item_col="tag")
-        a = mapping.select(F.col("id").alias("id_a"), F.col("hts").alias("hts_a"))
-        b = mapping.select(F.col("id").alias("id_b"), F.col("hts").alias("hts_b"))
-        # pair_candidates emits id_a < id_b; the reference's motif filter
-        # keeps c.id > d.id and exports src=c.id, dst=d.id (:164-185), so
-        # the greater id is the edge source.
-        scored = (
-            cands.join(a, "id_a")
-            .join(b, "id_b")
-            .select(
-                F.col("id_b").alias("src"),
-                F.col("id_a").alias("dst"),
-                jaccard(F.col("hts_a"), F.col("hts_b")).alias("w"),
-            )
+        tag_edges = self.user_hashtags().select(
+            F.struct("id", F.size("hts").alias("n")).alias("ent"),
+            F.explode("hts").alias("tag"),
+        )
+        cands = pair_candidates(tag_edges, min_shared=2, src_col="ent", item_col="tag")
+        # pair_candidates emits id_a < id_b (the struct orders by its
+        # unique id first); the reference's motif filter keeps c.id > d.id
+        # and exports src=c.id, dst=d.id (:164-185), so the greater id is
+        # the edge source.
+        union = F.col("id_a.n") + F.col("id_b.n") - F.col("shared")
+        scored = cands.select(
+            F.col("id_b.id").alias("src"),
+            F.col("id_a.id").alias("dst"),
+            (F.col("shared").cast("double") / union.cast("double")).alias("w"),
         )
         return scored.where(F.col("w") > self.jaccard_threshold).withColumn(
             "type", F.lit("JC")
@@ -161,14 +209,16 @@ class TweetGraphPipeline:
 
     # --- Q4: full graph (reference :37-46) --------------------------------
 
+    @_built_once
     def full_graph(self) -> Graph:
         """Union of RT + HT + JC edges and their induced vertices
-        (reference :39-46; .distinct() on both unions)."""
+        (reference :39-46, which applies .distinct() to both unions).
+        The edge union needs none: each part is unique on (src, dst) and
+        the parts differ in ``type``."""
         edges = (
             self.retweet_edges()
             .unionByName(self.hashtag_edges())
             .unionByName(self.jaccard_edges())
-            .distinct()
         )
         return Graph(vertices_from_edges(edges), edges)
 
@@ -247,6 +297,7 @@ class TweetGraphPipeline:
 
     # --- Q7: neighborhood subgraph (reference :252-276) -------------------
 
+    @_built_once
     def neighborhood(self, node_id: str, hops: int = 2) -> Graph:
         """k-hop neighborhood around a node — distributed frontier
         expansion replacing the reference's collect() loop; quirk flags
