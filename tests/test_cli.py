@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import csv
 import os
+import re
 
 import pytest
 
@@ -18,7 +19,7 @@ def _read_csv(path, sep=","):
         return list(csv.reader(fh, delimiter=sep))
 
 
-def test_cli_produces_all_artifacts(spark, tweets_json, tmp_path):
+def test_cli_produces_all_artifacts(spark, tweets_json, tmp_path, capsys):
     out = str(tmp_path / "outputs")
     main(
         [
@@ -57,6 +58,23 @@ def test_cli_produces_all_artifacts(spark, tweets_json, tmp_path):
     ne = _read_csv(os.path.join(out, "id_neighbours_1", "id.edges.csv"))
     assert len(ne) == 1 + 6
 
+    # every sink reports the rows it wrote: the printed counts are the
+    # data lines of the files, in artifact order
+    def data_lines(*parts):
+        with open(os.path.join(out, *parts)) as fh:
+            return sum(1 for _ in fh) - 1
+
+    printed = capsys.readouterr().out
+    assert re.findall(r"rows written: (\d+)", printed) == [
+        str(data_lines("wordCloud.csv")),
+        str(data_lines("exportPowerBI.csv")),
+    ]
+    graphs = [("gFull", "g"), ("id_neighbours_1", "id")]
+    assert re.findall(r"edges written: (\d+), vertices written: (\d+)", printed) == [
+        (str(data_lines(d, f"{p}.edges.csv")), str(data_lines(d, f"{p}.vertices.csv")))
+        for d, p in graphs
+    ]
+
 
 def test_cli_flag_spelling_matches_reference():
     # drop-in compatibility includes the reference's misspelled flag
@@ -68,6 +86,10 @@ def test_cli_flag_spelling_matches_reference():
     args = build_parser().parse_args(["in.json"])
     assert args.only_tags_from_not_retweetted_posts is False
     assert args.save_full_graph is False and args.id_neighbours is None
+    # the node id names an output directory: it must stay one component
+    for bad in ("", ".", "..", "../../leaked", f"a{os.sep}b"):
+        with pytest.raises(SystemExit):
+            build_parser().parse_args(["in.json", "--id_neighbours", bad])
 
 
 def test_cli_releases_persisted_tables(spark, tweets_json, tmp_path, persisted_rdds):
@@ -107,8 +129,8 @@ def test_cli_cleans_up_when_an_artifact_raises(
     import tvbigdataproject_spark.session as session
     import tvbigdataproject_spark.sources.io as io
 
-    def failing_save_graph(vertices, edges, *args, **kwargs):
-        edges.count()  # materialise the persisted tables first
+    def failing_save_graph(graph, *args, **kwargs):
+        graph.edges.count()  # materialise the persisted tables first
         raise RuntimeError("sink failed")
 
     owned = _OwnedSession(spark)

@@ -7,12 +7,7 @@ from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
-from tvbigdataproject_spark.functions import (
-    cnt_distinct_elems,
-    cnt_intersection,
-    jaccard,
-    normalize_tags,
-)
+from tvbigdataproject_spark.functions import jaccard, normalize_tags
 from tvbigdataproject_spark.functions.text import shingles, word_shingles
 
 tags = st.lists(
@@ -44,9 +39,6 @@ def test_jaccard_properties(spark, xs, ys):
             "jxy": jaccard(F.col("x"), F.col("y")),
             "jyx": jaccard(F.col("y"), F.col("x")),
             "jxx": jaccard(F.col("x"), F.col("x")),
-            "inter": cnt_intersection(F.col("x"), F.col("y")).cast("long"),
-            "nx": cnt_distinct_elems(F.col("x")).cast("long"),
-            "ny": cnt_distinct_elems(F.col("y")).cast("long"),
         },
         {"x": xs, "y": ys},
     )
@@ -56,8 +48,6 @@ def test_jaccard_properties(spark, xs, ys):
         assert out["jxx"] == 1.0  # reflexivity on non-empty sets
     # python-set ground truth
     sx, sy = set(xs), set(ys)
-    assert out["inter"] == len(sx & sy)
-    assert out["nx"] == len(sx)
     union = len(sx | sy)
     assert out["jxy"] == (len(sx & sy) / union if union else 0.0)
 

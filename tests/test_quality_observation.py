@@ -14,23 +14,17 @@ SF_DIR = "/root/testdata/sf0.001"
 
 def test_observation_matches_direct_computation(spark):
     docs = read_table(spark, SF_DIR, "documents")
-    observed, obs = with_quality_observation(
-        docs, null_cols=["lang", "source"], numeric_col="n_chars"
-    )
+    observed, obs = with_quality_observation(docs, null_cols=["lang", "source"])
     rows = observed.collect()  # any action on the observed frame
     direct = docs.agg(
         F.count(F.lit(1)).alias("rows"),
         F.sum(F.col("lang").isNull().cast("long")).alias("nl"),
         F.sum(F.col("source").isNull().cast("long")).alias("ns"),
-        F.min("n_chars").alias("mn"),
-        F.max("n_chars").alias("mx"),
     ).collect()[0]
     got = obs.get
     assert got["rows"] == direct["rows"] == len(rows)
     assert got["nulls_lang"] == direct["nl"]
     assert got["nulls_source"] == direct["ns"]
-    assert got["min_n_chars"] == direct["mn"]
-    assert got["max_n_chars"] == direct["mx"]
 
 
 def test_observation_rides_downstream_transformations(spark):
@@ -54,18 +48,12 @@ def test_observation_does_not_perturb_results(spark):
 
 
 def test_audited_sinks_return_metrics(spark, tmp_path):
-    # the product wiring: the CSV sinks ride the observation on their
-    # own write and hand back the metrics dict (rows + null counts)
-    from tvbigdataproject_spark.sources.io import write_csv, write_single_csv
+    # the product wiring: the CSV sink rides the observation on its
+    # own write and hands back the metrics dict (rows + null counts)
+    from tvbigdataproject_spark.sources.io import write_single_csv
 
     df = spark.createDataFrame(
         [(1, "a"), (2, None), (3, "c")], "id long, name string"
     )
-    m1 = write_single_csv(
-        df, str(tmp_path / "one.csv"), audit_null_cols=["name"]
-    )
+    m1 = write_single_csv(df, str(tmp_path / "one.csv"), ";", ["name"])
     assert m1 == {"rows": 3, "nulls_name": 1}
-    m2 = write_csv(df, str(tmp_path / "many"), audit_null_cols=["name"])
-    assert m2 == {"rows": 3, "nulls_name": 1}
-    # audit off -> sinks stay None-returning
-    assert write_single_csv(df, str(tmp_path / "plain.csv")) is None

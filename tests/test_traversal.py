@@ -265,6 +265,26 @@ def test_reachable_set_max_rounds_raises(spark):
         reachable_set(chain, srcs, max_rounds=3, local_edge_threshold=0)
 
 
+def test_reachable_set_local_matches_distributed(spark):
+    # size-gated driver-local BFS endgame vs the distributed frontier
+    # loop: identical node sets, forward and on the reversed edges
+    from tvbigdataproject_spark.operators.traversal import reachable_set
+
+    edges = spark.createDataFrame(
+        [(1, 2), (2, 3), (3, 4), (5, 1), (3, 2), (6, 5)],
+        "src long, dst long",
+    )
+    rev = edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+    srcs = spark.createDataFrame([(1,)], "node long")
+    for e, want in ((edges, {1, 2, 3, 4}), (rev, {1, 5, 6})):
+        local = {r.node for r in reachable_set(e, srcs).collect()}
+        dist = {
+            r.node
+            for r in reachable_set(e, srcs, local_edge_threshold=0).collect()
+        }
+        assert local == dist == want
+
+
 def test_reachable_masks_fused_equals_two_sweeps(spark):
     import pytest
 

@@ -32,6 +32,19 @@ import sys
 from pyspark.sql import functions as F
 
 
+def _path_component(value: str) -> str:
+    """The node id names the output directory ``id_neighbours_<id>``, so
+    it must be one plain path component: with a path separator in it the
+    files would land outside ``--output_path``."""
+    seps = [s for s in (os.sep, os.altsep) if s]
+    if value in ("", ".", "..") or any(s in value for s in seps):
+        raise argparse.ArgumentTypeError(
+            f"invalid node id {value!r}: must not be empty, '.' or '..', "
+            "nor contain a path separator"
+        )
+    return value
+
+
 def build_parser() -> argparse.ArgumentParser:
     parser = argparse.ArgumentParser(
         prog="python -m tvbigdataproject_spark",
@@ -48,7 +61,9 @@ def build_parser() -> argparse.ArgumentParser:
         default=os.path.join(os.getcwd(), "outputs"),
         help="Output path",
     )
-    parser.add_argument("--id_neighbours", type=str, help="Neighbours of id node")
+    parser.add_argument(
+        "--id_neighbours", type=_path_component, help="Neighbours of id node"
+    )
     parser.add_argument(
         "--save_full_graph",
         action=argparse.BooleanOptionalAction,
@@ -107,11 +122,11 @@ def main(argv: list[str] | None = None, spark=None) -> None:
 
 
 def _write_artifacts(args: argparse.Namespace, pipe) -> None:
-    from tvbigdataproject_spark.sources.io import save_graph, write_single_csv
+    from tvbigdataproject_spark.sources.io import write_single_csv
 
     out = args.output_path
     # every materialization rides inline quality accounting on its own
-    # write (operators/quality.py via the sinks' audit hooks — df.observe,
+    # write (operators/quality.py via write_single_csv — df.observe,
     # zero extra scan) and reports rows written, the production habit of
     # hanging counters on each sink step.
     if args.save_word_cloud:
@@ -120,21 +135,13 @@ def _write_artifacts(args: argparse.Namespace, pipe) -> None:
             pipe.word_cloud_corpus().select(F.col("text").alias("txt_plus_rt")),
             os.path.join(out, "wordCloud.csv"),
             sep=",",
-            audit_null_cols=[],
+            null_cols=[],
         )
         print(f"  rows written: {m['rows']}")
 
     if args.save_full_graph:
         print("Saving full graph")
-        g = pipe.full_graph()
-        gm = save_graph(
-            g.vertices, g.edges, os.path.join(out, "gFull"), prefix="g",
-            single_file=True, sep=",", audit=True,
-        )
-        print(
-            f"  edges written: {gm['edges']['rows']}, "
-            f"vertices written: {gm['vertices']['rows']}"
-        )
+        _save_graph(pipe.full_graph(), os.path.join(out, "gFull"), "g")
 
     if args.save_pbi_report:
         print("Saving Power BI report")
@@ -149,26 +156,27 @@ def _write_artifacts(args: argparse.Namespace, pipe) -> None:
             report,
             os.path.join(out, "exportPowerBI.csv"),
             sep=";",
-            audit_null_cols=["user"],
+            null_cols=["user"],
         )
         print(f"  rows written: {m['rows']} (null users: {m['nulls_user']})")
 
     if args.id_neighbours:
         print(f"Saving neighbours of node id={args.id_neighbours}")
-        g = pipe.neighborhood(args.id_neighbours, hops=2)
-        gm = save_graph(
-            g.vertices,
-            g.edges,
+        _save_graph(
+            pipe.neighborhood(args.id_neighbours, hops=2),
             os.path.join(out, f"id_neighbours_{args.id_neighbours}"),
-            prefix="id",
-            single_file=True,
-            sep=",",
-            audit=True,
+            "id",
         )
-        print(
-            f"  edges written: {gm['edges']['rows']}, "
-            f"vertices written: {gm['vertices']['rows']}"
-        )
+
+
+def _save_graph(graph, path: str, prefix: str) -> None:
+    from tvbigdataproject_spark.sources.io import save_graph
+
+    gm = save_graph(graph, path, prefix)
+    print(
+        f"  edges written: {gm['edges']['rows']}, "
+        f"vertices written: {gm['vertices']['rows']}"
+    )
 
 
 if __name__ == "__main__":

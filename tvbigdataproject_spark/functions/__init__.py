@@ -1,7 +1,5 @@
 from tvbigdataproject_spark.functions.core import (  # noqa: F401
     array_to_string,
-    cnt_distinct_elems,
-    cnt_intersection,
     jaccard,
     normalize_tags,
 )

@@ -49,19 +49,6 @@ def jaccard(xs: Column, ys: Column) -> Column:
     return F.when(union > 0, inter / union).otherwise(F.lit(0.0))
 
 
-def cnt_distinct_elems(xs: Column) -> Column:
-    """Distinct-element count of an array, as IntegerType.
-
-    Replaces ``cntElemts`` (reference: bigdata/__init__.py:26 —
-    ``len(set(x))``, *not* array length)."""
-    return F.size(F.array_distinct(xs))
-
-
-def cnt_intersection(xs: Column, ys: Column) -> Column:
-    """|set(x) ∩ set(y)| (reference: bigdata/__init__.py:27)."""
-    return F.size(F.array_intersect(F.array_distinct(xs), F.array_distinct(ys)))
-
-
 def array_to_string(xs: Column) -> Column:
     """``'[a,b,c]'`` rendering (reference: bigdata/__init__.py:23,
     used at RetweetTagsJaccardGraph.py:237-240)."""

@@ -31,13 +31,6 @@ class Graph:
     vertices: DataFrame
     edges: DataFrame
 
-    def filter_edges(self, condition) -> "Graph":
-        """Subgraph by edge predicate (reference G3: g.filterEdges with a
-        string-concatenated SQL filter, RetweetTagsJaccardGraph.py:262-263
-        — here a bound Column expression, no injection surface)."""
-        e = self.edges.where(condition)
-        return Graph(vertices_from_edges(e), e)
-
 
 def vertices_from_edges(edges: DataFrame) -> DataFrame:
     """Induced vertex set: src ∪ dst, distinct (reference G5:
@@ -49,24 +42,7 @@ def vertices_from_edges(edges: DataFrame) -> DataFrame:
     )
 
 
-def degrees(edges: DataFrame) -> DataFrame:
-    """Per-vertex in/out degree and strength (weighted degree)."""
-    out_d = edges.groupBy(F.col("src").alias("id")).agg(
-        F.count(F.lit(1)).alias("out_degree"), F.sum("w").alias("out_strength")
-    )
-    in_d = edges.groupBy(F.col("dst").alias("id")).agg(
-        F.count(F.lit(1)).alias("in_degree"), F.sum("w").alias("in_strength")
-    )
-    return (
-        out_d.join(in_d, "id", "full")
-        .na.fill(0, ["out_degree", "in_degree"])
-        .na.fill(0.0, ["out_strength", "in_strength"])
-    )
-
-
-def filter_edges_by_nodes(
-    edges: DataFrame, node_ids: DataFrame, types: list[str] | None = None
-) -> DataFrame:
+def filter_edges_by_nodes(edges: DataFrame, node_ids: DataFrame) -> DataFrame:
     """Edges incident to any node in ``node_ids`` (a 1-column ``id`` frame).
 
     The reference builds ``src in (...) OR dst in (...)`` strings from a
@@ -78,19 +54,10 @@ def filter_edges_by_nodes(
     ids = node_ids.select(F.col(node_ids.columns[0]).alias("id")).distinct()
     hit_src = edges.join(ids.withColumnRenamed("id", "src"), "src", "left_semi")
     hit_dst = edges.join(ids.withColumnRenamed("id", "dst"), "dst", "left_semi")
-    out = hit_src.unionByName(hit_dst).distinct()
-    if types is not None:
-        out = out.where(F.col("type").isin(types))
-    return out
+    return hit_src.unionByName(hit_dst).distinct()
 
 
-def k_hop_neighborhood(
-    edges: DataFrame,
-    seed_id: str,
-    hops: int = 2,
-    follow_dst_only: bool = True,
-    exclude_types_from_hop: tuple[str, ...] = ("HT",),
-) -> Graph:
+def k_hop_neighborhood(edges: DataFrame, seed_id: str, hops: int = 2) -> Graph:
     """Distributed k-hop neighborhood subgraph around ``seed_id``.
 
     Replaces the reference's extractNeighbours
@@ -100,29 +67,20 @@ def k_hop_neighborhood(
     Here the frontier stays a DataFrame joined back against the edge
     table per hop; each hop is one semi-join (broadcast when small).
 
-    Reference quirks preserved behind flags (SURVEY.md §7.4):
-    - ``follow_dst_only``: the reference's loop appends only row["dst"]
-      (:267-268), never src, so expansion follows out-edges only;
-    - ``exclude_types_from_hop``: hop expansion skips HT edges
-      (``if row["type"] != "HT"`` :267), though HT edges incident to the
-      frontier still appear in the final subgraph (:271-272).
+    Reference quirks preserved (SURVEY.md §7.4):
+    - expansion follows out-edges only: the reference's loop appends
+      only row["dst"] (:267-268), never src;
+    - hop expansion skips HT edges (``if row["type"] != "HT"`` :267),
+      though HT edges incident to the frontier still appear in the
+      final subgraph (:271-272).
     """
     frontier = edges.sparkSession.createDataFrame([(seed_id,)], "id string")
     visited = frontier
     for _ in range(hops - 1):
         hop_edges = edges.join(
             frontier.withColumnRenamed("id", "src"), "src", "left_semi"
-        )
-        if not follow_dst_only:
-            back_edges = edges.join(
-                frontier.withColumnRenamed("id", "dst"), "dst", "left_semi"
-            )
-            hop_edges = hop_edges.unionByName(back_edges)
-        if exclude_types_from_hop:
-            hop_edges = hop_edges.where(~F.col("type").isin(list(exclude_types_from_hop)))
+        ).where(F.col("type") != "HT")
         nxt = hop_edges.select(F.col("dst").alias("id"))
-        if not follow_dst_only:
-            nxt = nxt.unionByName(hop_edges.select(F.col("src").alias("id")))
         frontier = nxt.distinct().join(visited, "id", "left_anti")
         visited = visited.unionByName(frontier).distinct()
     sub_edges = filter_edges_by_nodes(edges, visited)

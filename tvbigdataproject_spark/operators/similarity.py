@@ -125,9 +125,10 @@ _INDEX_CACHE: dict[tuple, "DataFrame"] = {}
 
 def release_ivf_caches() -> None:
     """Drop the memoized IVF centroids and unpersist the inverted-list
-    index. The bench calls this after every timed rep so each measured
-    execution recomputes from the parquet inputs (the amortization is a
-    deployment property, not a benchmark one); tests may call it for
+    index. The benchmark runner calls this (through
+    session.release_session_caches) before every operation, so each
+    measured execution recomputes from its inputs (the amortization is
+    a deployment property, not a benchmark one); tests may call it for
     isolation."""
     _CENTER_CACHE.clear()
     for df in _INDEX_CACHE.values():

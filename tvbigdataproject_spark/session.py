@@ -67,9 +67,11 @@ def release_session_caches(spark: SparkSession) -> None:
     (shared trade-edge checkpoints, IVF centroid/index memos).
 
     The library memoizes these because a deployment amortizes an index
-    or edge-table build across many queries — but a BENCHMARK rep must
-    compute from the parquet inputs, so bench.py calls this after every
-    timed rep. Cheap (a few unpersist RPCs) when nothing is cached.
+    or edge-table build across many queries — but a benchmark operation
+    must compute from its inputs, so the benchmark runner
+    (perfbench/harness.py, ``Runner._op``) calls this before every
+    operation, as bench.py does before every timed rep. Cheap (a few
+    unpersist RPCs) when nothing is cached.
     """
     from tvbigdataproject_spark.operators.similarity import release_ivf_caches
     from tvbigdataproject_spark.operators.trade_edges import release_trade_pairs

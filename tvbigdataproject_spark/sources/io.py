@@ -4,19 +4,25 @@ Reference sinks force a single output file via ``repartition(1)`` before
 every CSV write (reference: RetweetTagsJaccardGraph.py:242,
 bigdata/__init__.py:91,107,111) — a one-task stage that serializes the
 whole dataset through one core. At scale that is the single worst plan
-node in the reference, so sinks here default to the natural output
-parallelism; callers that truly want few files pass ``coalesce_to`` and
-it is applied as ``coalesce`` (no extra shuffle), never ``repartition(1)``.
+node in the reference. The CLI's artifacts are small final outputs that
+must each be one CSV file, so its one sink, ``write_single_csv``, runs
+the plan at full parallelism and applies ``coalesce(1)`` (no extra
+shuffle) only to the final write; ``save_graph`` writes a graph as two
+such files.
 """
 
 from __future__ import annotations
 
 import os
+from typing import TYPE_CHECKING
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from tvbigdataproject_spark.schemas import TESTDATA_SCHEMAS, TWEET_SCHEMA
+
+if TYPE_CHECKING:
+    from tvbigdataproject_spark.operators.graph import Graph
 
 
 def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -98,10 +104,6 @@ def _first_parquet_file(path: str) -> str:
     raise FileNotFoundError(f"no *.parquet file under {path}")
 
 
-def read_tables(spark: SparkSession, sf_dir: str, *names: str) -> tuple[DataFrame, ...]:
-    return tuple(read_table(spark, sf_dir, n) for n in names)
-
-
 def read_table_spread(
     spark: SparkSession, sf_dir: str, name: str, *keys: str
 ) -> DataFrame:
@@ -156,42 +158,12 @@ def read_tweets(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.schema(TWEET_SCHEMA).json(path)
 
 
-def write_csv(
-    df: DataFrame,
-    path: str,
-    sep: str = ";",
-    header: bool = True,
-    coalesce_to: int | None = None,
-    audit_null_cols: list[str] | None = None,
-) -> dict | None:
-    """CSV sink (reference S2/S3: RetweetTagsJaccardGraph.py:242-243).
-
-    ``audit_null_cols`` (may be ``[]``) attaches inline quality
-    accounting (operators/quality.py): row count + per-column null
-    counts ride the write's own scan via ``df.observe`` — no second
-    pass — and come back as a dict."""
-    metrics = None
-    if audit_null_cols is not None:
-        from tvbigdataproject_spark.operators.quality import (
-            with_quality_observation,
-        )
-
-        df, obs = with_quality_observation(df, null_cols=audit_null_cols)
-        metrics = obs
-    if coalesce_to is not None:
-        df = df.coalesce(coalesce_to)
-    df.write.mode("overwrite").option("header", str(header).lower()).option("sep", sep).csv(path)
-    return dict(metrics.get) if metrics is not None else None
-
-
 def write_single_csv(
-    df: DataFrame,
-    file_path: str,
-    sep: str = ";",
-    header: bool = True,
-    audit_null_cols: list[str] | None = None,
-) -> dict | None:
-    """Write ``df`` as ONE real CSV file at ``file_path``.
+    df: DataFrame, file_path: str, sep: str, null_cols: list[str]
+) -> dict:
+    """Write ``df`` as ONE real CSV file (with a header) at ``file_path``
+    and return its quality metrics: ``rows`` and ``nulls_<col>`` for
+    each of ``null_cols`` (may be ``[]``).
 
     The reference's Gephi / Power BI workflow expects a single
     ``prefix.edges.csv`` file (bigdata/__init__.py:107-113 forces it with
@@ -201,97 +173,56 @@ def write_single_csv(
     part file is renamed over ``file_path``.
 
     Single-file output is inherently driver-adjacent — use it only for
-    small final artifacts (reports, subgraphs); large datasets belong in
-    the parallel sinks above. Local filesystem only (the rename is an
-    os-level move); on an object store, write parallel and compose
-    downstream instead.
+    small final artifacts (reports, subgraphs). Local filesystem only
+    (the rename is an os-level move); on an object store, write parallel
+    and compose downstream instead.
 
-    ``audit_null_cols`` (may be ``[]``) rides quality accounting on the
-    write itself (see write_csv) and returns the metrics dict.
+    The metrics ride the write's own scan via ``df.observe``
+    (operators/quality.py) — no second pass.
     """
     import glob
     import shutil
     import tempfile
 
-    metrics = None
-    if audit_null_cols is not None:
-        from tvbigdataproject_spark.operators.quality import (
-            with_quality_observation,
-        )
+    from tvbigdataproject_spark.operators.quality import (
+        with_quality_observation,
+    )
 
-        df, metrics = with_quality_observation(df, null_cols=audit_null_cols)
-    parent = os.path.dirname(os.path.abspath(file_path)) or "."
+    df, metrics = with_quality_observation(df, null_cols=null_cols)
+    parent = os.path.dirname(os.path.abspath(file_path))
     os.makedirs(parent, exist_ok=True)
     tmp = tempfile.mkdtemp(dir=parent)
     try:
         out_dir = os.path.join(tmp, "out")
         df.coalesce(1).write.mode("overwrite").option(
-            "header", str(header).lower()
+            "header", "true"
         ).option("sep", sep).csv(out_dir)
         (part,) = glob.glob(os.path.join(out_dir, "part-*.csv"))
-        os.makedirs(os.path.dirname(os.path.abspath(file_path)), exist_ok=True)
         if os.path.isdir(file_path):
             shutil.rmtree(file_path)
         os.replace(part, file_path)
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
-    return dict(metrics.get) if metrics is not None else None
+    return dict(metrics.get)
 
 
-def write_parquet(df: DataFrame, path: str, partition_by: list[str] | None = None) -> None:
-    writer = df.write.mode("overwrite")
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(path)
-
-
-def save_graph(
-    vertices: DataFrame,
-    edges: DataFrame,
-    path: str,
-    prefix: str = "g",
-    fmt: str = "csv",
-    coalesce_to: int | None = None,
-    single_file: bool = False,
-    sep: str = ";",
-    audit: bool = False,
-) -> dict | None:
-    """Graph sink: edges + vertices as two datasets (reference S4:
-    bigdata/__init__.py:96-114 writes ``prefix.edges.csv`` /
-    ``prefix.vertices.csv`` via repartition(1); here both stay parallel
-    by default, CSV kept for Gephi compatibility, parquet for everything
-    else; ``single_file=True`` produces the reference's exact one-file
-    layout via write_single_csv for small final graphs). ``audit=True``
-    (CSV modes) rides row accounting on both writes and returns
-    ``{"edges": {...}, "vertices": {...}}``."""
-    e_path = os.path.join(path, f"{prefix}.edges.{fmt}")
-    v_path = os.path.join(path, f"{prefix}.vertices.{fmt}")
-    null_cols: list[str] | None = [] if audit else None
-    if fmt == "csv":
-        if single_file:
-            em = write_single_csv(edges, e_path, sep=sep, audit_null_cols=null_cols)
-            vm = write_single_csv(vertices, v_path, sep=sep, audit_null_cols=null_cols)
-        else:
-            em = write_csv(
-                edges, e_path, sep=sep, coalesce_to=coalesce_to, audit_null_cols=null_cols
-            )
-            vm = write_csv(
-                vertices, v_path, sep=sep, coalesce_to=coalesce_to, audit_null_cols=null_cols
-            )
-        if audit:
-            return {"edges": em, "vertices": vm}
-    else:
-        write_parquet(edges, e_path)
-        write_parquet(vertices, v_path)
-    return None
+def save_graph(graph: Graph, path: str, prefix: str) -> dict:
+    """Graph sink (reference S4: bigdata/__init__.py:96-114): the edges
+    and vertices as ``<path>/<prefix>.edges.csv`` and
+    ``<prefix>.vertices.csv``, each one comma-separated file written by
+    write_single_csv. Returns ``{"edges": {...}, "vertices": {...}}``,
+    the row accounting of both writes."""
+    em = write_single_csv(graph.edges, os.path.join(path, f"{prefix}.edges.csv"), ",", [])
+    vm = write_single_csv(graph.vertices, os.path.join(path, f"{prefix}.vertices.csv"), ",", [])
+    return {"edges": em, "vertices": vm}
 
 
 def write_orc(
     df: DataFrame, path: str, partition_by: list[str] | None = None
 ) -> None:
     """ORC sink (zlib by default) — the columnar alternative for
-    Hive-ecosystem consumers; same partitioned-directory contract as
-    write_parquet (never repartition(1) — reference anti-pattern,
+    Hive-ecosystem consumers; writes a partitioned directory, never
+    repartition(1) (reference anti-pattern,
     RetweetTagsJaccardGraph.py:242)."""
     w = df.write.mode("overwrite")
     if partition_by:
